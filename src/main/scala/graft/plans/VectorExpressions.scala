@@ -739,7 +739,9 @@ case class ElementSignBits(child: Expression)
   * re-ran 2.6 s on a 0.28 s explode). Here the array lives ONCE in the
   * codegen references, the tree is one node, and the probe loop is a
   * tight short-circuiting whole-stage-codegen loop (same left-to-right
-  * And order). */
+  * And order). Each position is reduced with `floorMod`, so a negative
+  * key probes an in-range slot; for the non-negative md5 keys that is
+  * the same value as `%`. */
 case class BloomBitsProbe(child: Expression, bits: IndexedSeq[Long],
                           m: Long, k: Int)
     extends UnaryExpression {
@@ -770,7 +772,7 @@ case class BloomBitsProbe(child: Expression, bits: IndexedSeq[Long],
     var hit = true
     var j = 0
     while (j < k && hit) {
-      val p = (h1 + step * j) % m
+      val p = Math.floorMod(h1 + step * j, m)
       hit = ((bitsArr((p.toDouble / 64.0d).toInt) >> (p % 64L).toInt)
         & 1L) == 1L
       j += 1
@@ -792,7 +794,7 @@ case class BloomBitsProbe(child: Expression, bits: IndexedSeq[Long],
          |long $step = ((long) ((double) $s / 1048576.0D)) * 2L + 1L;
          |boolean $hit = true;
          |for (int $j = 0; $j < $k && $hit; $j++) {
-         |  long $p = ($h1 + $step * (long) $j) % ${m}L;
+         |  long $p = java.lang.Math.floorMod($h1 + $step * (long) $j, ${m}L);
          |  $hit = (($arr[(int) ((double) $p / 64.0D)]
          |    >> ((int) ($p % 64L))) & 1L) == 1L;
          |}

@@ -167,10 +167,24 @@ object Tables {
     *    `checkpoint()` — same lineage truncation, HDFS-backed blocks. The
     *    local bench/verify paths never set one, so fixture behavior (and
     *    every measured number) is unchanged.
+    *  - With a checkpoint dir set, the context must also run with
+    *    `spark.cleaner.referenceTracking.cleanCheckpoints=true`. Reliable
+    *    checkpoint files are otherwise never deleted, and the iterative
+    *    callers (the connected-components loop, k-means rounds) would leak
+    *    one checkpoint directory per round. This helper refuses to stage
+    *    without it.
     */
-  private[graft] def stage(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
+  private[graft] def stage(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    if (sc.getCheckpointDir.isDefined) {
+      val clean = "spark.cleaner.referenceTracking.cleanCheckpoints"
+      require(sc.getConf.getBoolean(clean, false),
+        s"a checkpoint dir is set, so staging writes reliable checkpoints: " +
+          s"set $clean=true, or every staged round leaks its checkpoint " +
+          "directory")
+      df.checkpoint()
+    } else df.localCheckpoint()
+  }
 
   private val countMemoMap =
     new scala.collection.concurrent.TrieMap[(String, String, Long), Long]

@@ -146,46 +146,44 @@ object ChangelogStream {
       buf ++= recs
     }
 
-    /** Records this log can still accept before [[append]] fails. Sinks
-      * whose per-batch record count is input-row-bound (appending /
-      * deltaPassthrough) use this to bound the micro-batch `collect()`
-      * itself: `limit(remainingCapacity + 1)` transfers at most one row
-      * past the cap — enough for append to raise the documented over-cap
-      * error — so a catch-up micro-batch larger than driver memory can
-      * never OOM the driver before the cap fires (r7 verdict item #3). */
-    def remainingCapacity: Int = synchronized(maxRecords - buf.length)
+    /** Records this log can still accept before [[append]] fails. */
+    private def remainingCapacity: Int = synchronized(maxRecords - buf.length)
 
-    /** Fail-fast-bounded driver transfer for the SYNTHESIZER sinks
-      * (updating / snapshotting / foldingSnapshot), whose batch rows feed
-      * stateful diffing rather than appending 1:1 — a `limit()` on the
-      * batch would silently corrupt synthesizer state (dropped groups
-      * read as deletions), so the bound is a pre-collect COUNT: an
-      * executor-side `limit(cap+1).count` that moves at most a long to
-      * the driver, erroring via the documented cap before any oversized
-      * `collect()` can OOM the driver.
+    /** Fail-fast-bounded driver transfer, the one way every sink moves a
+      * micro-batch to the driver: a single `limit(cap + 1).collect()`, so a
+      * catch-up micro-batch larger than driver memory errors via the
+      * documented cap instead of OOMing the driver. One action, because
+      * the batch is a lineage over the incremental plan: every action on
+      * it re-runs the whole micro-batch (scan, shuffle, StateStore load
+      * and commit).
       *
-      * The bound must hold AFTER synthesis, never before: N batch rows
-      * can emit up to 2N records (a `-U/+U` pair per changed group) plus
-      * one `-D` per group dropped from a snapshot diff — and an append()
-      * failure after the synthesizer folded the batch would leave its
-      * state ahead of the log. So callers pass their synthesizer's live
-      * group count and the batch is counted against
-      * `(remaining − synthSize) / 2`: emissions ≤ 2·rows + dropped ≤
-      * 2·cap + synthSize ≤ remaining, making the guard the ONLY failure
-      * point — it fires before any state mutation or oversized
-      * collect(). */
-    def boundedCollect(batch: org.apache.spark.sql.DataFrame,
-                       synthSize: Int)
-        : Seq[org.apache.spark.sql.Row] = {
-      val cap = math.max(0, (remainingCapacity - synthSize) / 2)
-      if (batch.limit(cap + 1).count() > cap)
+      * More than `cap` rows back means the batch did not fit, and this
+      * throws before the sink's synthesizer or this log is touched. At
+      * most `cap` rows means `limit(cap + 1)` returned all of them, so a
+      * folded batch is never truncated (in synthesizer state a missing
+      * group would read as a deletion).
+      *
+      * `cap` is `(remaining − reserve) / recordsPerRow`. Pass-through sinks
+      * (appending / deltaPassthrough) emit one record per row: the
+      * defaults. Synthesizer sinks (updating / snapshotting /
+      * foldingSnapshot) emit up to 2N records for N rows (a `-U/+U` pair
+      * per changed group) plus one `-D` per group dropped from a snapshot
+      * diff, so they pass `recordsPerRow = 2` and their synthesizer's live
+      * group count as `reserve`: emissions ≤ 2·cap + reserve ≤ remaining,
+      * which makes this guard the ONLY failure point — an append() failure
+      * after the fold would leave synthesizer state ahead of the log. */
+    def boundedCollect(batch: DataFrame, recordsPerRow: Int = 1,
+                       reserve: Int = 0): Seq[Vector[Any]] = {
+      val cap = math.max(0, (remainingCapacity - reserve) / recordsPerRow)
+      val rows = batch.limit(cap + 1).collect()
+      if (rows.length > cap)
         throw new IllegalStateException(
           s"changelog sink micro-batch exceeds remaining capacity $cap of " +
             s"maxBufferedRecords=$maxRecords before collect: these sinks " +
             "retain results driver-side for cursor replay and are meant " +
             "for dashboard-sized result consumption, not ETL — consume a " +
             "bounded query, or write large results to a real sink")
-      batch.collect().toSeq
+      rows.toSeq.map(_.toSeq.toVector)
     }
 
     private def logSize: Int = synchronized(buf.length)
@@ -271,11 +269,11 @@ object ChangelogStream {
       .queryName(queryName)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // fail-fast bound BEFORE the driver transfer (see boundedCollect):
-        // a high-cardinality grouping in a catch-up micro-batch must error
-        // via the documented cap, not OOM the driver
-        val rows = log.boundedCollect(batch, synth.synchronized(synth.size))
-          .map(r => r.toSeq.toVector)
+        // one bounded transfer (see boundedCollect): a high-cardinality
+        // grouping in a catch-up micro-batch errors via the documented
+        // cap, not OOM the driver
+        val rows = log.boundedCollect(batch, recordsPerRow = 2,
+          reserve = synth.synchronized(synth.size))
         val q = Option(queryRef).orElse(
           ownerSession.streams.active.find(_.name == queryName))
         val recs = synth.synchronized {
@@ -308,10 +306,10 @@ object ChangelogStream {
       .queryName(queryName)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // same fail-fast pre-collect bound as `updating` — a complete-mode
-        // snapshot larger than the log's remaining capacity cannot fit
-        val rows = log.boundedCollect(batch, synth.synchronized(synth.size))
-          .map(r => r.toSeq.toVector)
+        // same bounded transfer as `updating` — a complete-mode snapshot
+        // larger than the log's remaining capacity cannot fit
+        val rows = log.boundedCollect(batch, recordsPerRow = 2,
+          reserve = synth.synchronized(synth.size))
         val recs = synth.synchronized(synth.onSnapshot(rows))
         log.append(recs.map(r => RawRecord(r.op.map(_.code), r.values)))
         ()
@@ -354,8 +352,8 @@ object ChangelogStream {
       .queryName(queryName)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val deltas = log.boundedCollect(batch, synth.synchronized(synth.size))
-          .map(r => r.toSeq.toVector)
+        val deltas = log.boundedCollect(batch, recordsPerRow = 2,
+          reserve = synth.synchronized(synth.size))
         // fold + diff under one lock: foreachBatch invocations are serial
         // per query, but cursor replays may race the append
         val recs = synth.synchronized(fold(deltas).flatMap(synth.onSnapshot))
@@ -383,11 +381,8 @@ object ChangelogStream {
       .queryName(queryName)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // each input row is exactly one record: bound the driver transfer
-        // to cap+1 rows so an oversized catch-up batch fails via the log's
-        // documented error instead of OOMing the driver in collect()
-        log.append(batch.limit(log.remainingCapacity + 1).collect().toSeq.map { r =>
-          val vs = r.toSeq.toVector
+        // each input row is exactly one record (see boundedCollect)
+        log.append(log.boundedCollect(batch).map { vs =>
           RawRecord(Some(vs(opIdx).asInstanceOf[Int]), vs.patch(opIdx, Nil, 1))
         })
         ()
@@ -410,10 +405,9 @@ object ChangelogStream {
       .queryName(queryName)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // append-only: one record per input row, so limit(cap+1) bounds the
-        // collect while preserving the documented over-cap failure
-        log.append(batch.limit(log.remainingCapacity + 1).collect().toSeq
-          .map(r => RawRecord(Some(Op.Insert.code), r.toSeq.toVector)))
+        // append-only: one record per input row (see boundedCollect)
+        log.append(log.boundedCollect(batch)
+          .map(vs => RawRecord(Some(Op.Insert.code), vs)))
         ()
       }
       .start()

@@ -280,4 +280,38 @@ class VectorExpressionsSpec extends AnyFunSuite {
     assert(names.distinct.size == names.size,
       s"duplicate local declarations across two instances: $names")
   }
+
+  test("BloomBitsProbe: a negative key probes in range and agrees between " +
+      "the interpreted and codegen paths; non-negative keys are unchanged") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.LongType
+    val rnd = new scala.util.Random(11)
+    val m = 1024L; val k = 4
+    val bits = IndexedSeq.fill((m / 64).toInt)(rnd.nextLong())
+    val probe = BloomBitsProbe(BoundReference(0, LongType, nullable = false),
+      bits, m, k)
+    // no fallback: a codegen compile failure fails the test
+    val compiled = GenerateUnsafeProjection.generate(Seq(probe))
+    def interpreted(s: Long): Boolean =
+      probe.eval(InternalRow(s)).asInstanceOf[Boolean]
+    def codegen(s: Long): Boolean = compiled(InternalRow(s)).getBoolean(0)
+    // the column formulation the probe replaces, with plain `%`
+    def columnForm(s: Long): Boolean = (0 until k).forall { j =>
+      val step = (s.toDouble / 1048576.0d).toLong * 2L + 1L
+      val p = (s % m + step * j) % m
+      ((bits((p / 64L).toInt) >> (p % 64L).toInt) & 1L) == 1L
+    }
+    val nonNegative = (0L until 2048L) ++
+      Seq.fill(500)(rnd.nextLong() & 0xffffffffL) // md5 keys are 32-bit
+    nonNegative.foreach { s =>
+      assert(interpreted(s) == columnForm(s), s"interpreted, key $s")
+      assert(codegen(s) == columnForm(s), s"codegen, key $s")
+    }
+    val negative = (-2048L until 0L) ++ Seq(Long.MinValue, -(1L << 40)) ++
+      Seq.fill(500)(-(rnd.nextLong() & 0xffffffffL) - 1L)
+    negative.foreach { s =>
+      assert(interpreted(s) == codegen(s), s"paths disagree on key $s")
+    }
+  }
 }

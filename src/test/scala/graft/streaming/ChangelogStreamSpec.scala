@@ -1,6 +1,8 @@
 package graft.streaming
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -217,7 +219,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
   }
 
   // the cap must protect the driver BEFORE the transfer, not only after:
-  // the sink collects `limit(remainingCapacity + 1)`, so a catch-up
+  // the sink's one bounded collect is `limit(cap + 1)`, so a catch-up
   // micro-batch far larger than the budget still fails via the log's
   // documented error while only ~cap+1 rows ever flow toward the driver.
   // An accumulator in the projection feeding the collect counts executor-
@@ -250,14 +252,15 @@ class ChangelogStreamSpec extends AnyFunSuite {
     } finally handle.stop()
   }
 
-  // the synthesizer sinks (updating/snapshotting) cannot bound via
-  // limit() — a truncated batch would corrupt synthesizer state (dropped
-  // groups would later read as deletions) — so their bound is fail-fast:
-  // an executor-side limit(cap+1).count BEFORE the collect. The
-  // nondeterministic instrumented projection (pruning-proof) counts row
-  // evaluations: the count pass evaluates ≤ partitions×(cap+1) rows and
-  // the collect pass would evaluate all R again, so evals < R proves the
-  // oversized transfer never happened.
+  // the synthesizer sinks (updating/snapshotting/foldingSnapshot) use the
+  // same single `limit(cap + 1).collect()` and fail fast when it returns
+  // more than cap rows, before the synthesizer folds anything — so a
+  // truncated batch never reaches synthesizer state (where dropped groups
+  // would later read as deletions). The nondeterministic instrumented
+  // projection (pruning-proof) counts row evaluations: the bounded collect
+  // evaluates ≤ partitions×(cap+1) rows, while a full collect would
+  // evaluate all R, so evals < R proves the oversized transfer never
+  // happened.
   test("over-cap grouped micro-batch fails via the cap before collecting") {
     val s = spark
     import s.implicits._
@@ -289,6 +292,54 @@ class ChangelogStreamSpec extends AnyFunSuite {
       assert(handle.changelog().consume().isEmpty,
         "failed batch must not leave partial records in the log")
     } finally handle.stop()
+  }
+
+  // a foreachBatch sink receives its micro-batch as a lineage over the
+  // incremental plan, so every action it runs re-executes the whole batch,
+  // stateful operators included. An accumulator UDF above the stateful
+  // operator counts plan executions, not time: one micro-batch of N
+  // groups, well under the cap, must evaluate it exactly N times.
+  test("synthesizer sinks execute each micro-batch exactly once") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val groups = 200
+    def executions(name: String)(start: (DataFrame, UserDefinedFunction) =>
+        ChangelogStream.Handle): Long = {
+      val mem = MemoryStream[Int]
+      val evals = s.sparkContext.longAccumulator(s"$name-evals")
+      val touched = udf { (i: Int) => evals.add(1L); i }.asNondeterministic()
+      val handle = start(mem.toDF(), touched)
+      try {
+        mem.addData(1 to groups)
+        handle.processAllAvailable()
+        assert(handle.changelog().consume().size == groups,
+          s"$name: one +I per group expected")
+        evals.value
+      } finally handle.stop()
+    }
+    def counted(in: DataFrame, touched: UserDefinedFunction): DataFrame =
+      in.groupBy($"value").agg(count(lit(1)).as("n"))
+        .select(touched($"value").as("k"), $"n")
+    val perSink = Map(
+      "updating" -> executions("exec-once-updating") { (in, touched) =>
+        ChangelogStream.updating(counted(in, touched), "exec-once-updating",
+          Seq("k"))
+      },
+      "snapshotting" -> executions("exec-once-snapshotting") { (in, touched) =>
+        ChangelogStream.snapshotting(counted(in, touched),
+          "exec-once-snapshotting", Seq("k"))
+      },
+      // foldingSnapshot takes an append-mode delta stream: the stateful
+      // operator there is a streaming deduplication
+      "foldingSnapshot" -> executions("exec-once-folding") { (in, touched) =>
+        ChangelogStream.foldingSnapshot(
+          in.dropDuplicates("value").select(touched($"value").as("k")),
+          "exec-once-folding", Seq("k"), Seq("k"), deltas => Seq(deltas))
+      })
+    assert(perSink.forall(_._2 == groups),
+      s"each sink must execute its $groups-group micro-batch once: " +
+        s"row evaluations per sink $perSink")
   }
 
   test("append-only streaming query passes rows through as +I") {
