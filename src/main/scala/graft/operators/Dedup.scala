@@ -68,7 +68,7 @@ object Dedup {
     * the 100 TB design point. The groupBy df table map-side combines to
     * one row per distinct shingle, and the re-attach equi-join's hot
     * probe partitions are exactly what AQE's skew-join splits — MEASURED
-    * (`graft.Profile skewprobe`, one key owning 2M of 4M rows): AQE caps
+    * (one key owning 2M of 4M rows): AQE caps
     * the max join task at 451k rows (4.6× split) where the window form
     * is stuck with the full 2.06M-row partition. The window form is
     * ~0.5 s faster at sf0.1 — and wrong at scale; the same reasoning is
@@ -429,7 +429,7 @@ object Dedup {
     * ≈ N²/2 × (keys/buckets) — so the lever is the coefficient: single
     * 8-bit bands give 8/256 = 1/32, band pairs give 28/65536 ≈ 1/2341, a
     * 73× smaller constant (MEASURED on 50k uniform-sig synthetic docs:
-    * 43.8M → 0.67M candidate pairs, 65×; `graft.Profile d5probe`). The
+    * 43.8M → 0.67M candidate pairs, 65×). The
     * same candidate budget is reached at √73 ≈ 8.5× more documents, paid
     * with a 28-row/doc explode of (2-byte key, 8-byte id) — linear. */
   def d5SimHash(spark: SparkSession, dir: String): DataFrame = {

@@ -439,7 +439,7 @@ object Pipeline {
     val hit = graft.plans.VectorExpressions
       .bloomBitsProbe($"s", bits.toIndexedSeq, m, BloomTwinK)
     // corpus-side spread measured exactly neutral here (r12 interleaved
-    // abn 1.00× — the probe stage is not the binding cost at sf0.1), so
+    // A/B 1.00× — the probe stage is not the binding cost at sf0.1), so
     // the scan keeps its native partitioning
     Tables.load(spark, dir, "documents")
       .filter($"source" =!= BenchmarkSource)

@@ -80,8 +80,7 @@ object Similarity {
     * (members+angles, surviving tile pairs, gathered tiles). See
     * [[v21CosinePairsBlocked]] for the algorithm and exactness argument. */
   private[operators] def v21Internals(spark: SparkSession, dir: String,
-                                      tau: Double, tileTarget: Int,
-                                      stageShared: Boolean = true)
+                                      tau: Double, tileTarget: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
     val emb = normalizedEmbeddings(spark, dir)
@@ -105,16 +104,12 @@ object Similarity {
     // tilePairs leg. withAngle is corpus-proportional (the p29/d15
     // caution) but NARROW — ids, one D-vector, two doubles — and the
     // sf1 interleaved cmp is the evidence the barrier pays.
-    // stageShared=false preserves the r12 recompute shape for Profile
-    // cmp A/Bs.
-    val withAngle0 = ivfAssign(emb, centArray(cents), 1)
+    val withAngle = Tables.stage(ivfAssign(emb, centArray(cents), 1)
       .join(broadcast(cmeta), Seq("cent_id"))
       .withColumn("ra", angle(dot($"v", $"cv") / ($"nrm" * $"cn")))
-      .select($"cent_id", $"vec_id", $"v", $"nrm", $"ra")
-    val withAngle = if (stageShared) Tables.stage(withAngle0) else withAngle0
+      .select($"cent_id", $"vec_id", $"v", $"nrm", $"ra"))
     val radii = withAngle.groupBy($"cent_id").agg(max($"ra").as("r"))
-    val tm0 = cmeta.join(radii, Seq("cent_id"))
-    val tm = if (stageShared) Tables.stage(tm0) else tm0
+    val tm = Tables.stage(cmeta.join(radii, Seq("cent_id")))
     // triangle-inequality pruning on the ANGULAR metric θ = acos(cos):
     // a∈tile i, b∈tile j with cos(a,b) ≥ τ ⟹
     //   θ(cᵢ,cⱼ) ≤ θ(cᵢ,a) + θ(a,b) + θ(b,cⱼ) ≤ rᵢ + θτ + rⱼ,
@@ -180,11 +175,9 @@ object Similarity {
     * fixture scale. */
   def v21CosinePairsBlocked(spark: SparkSession, dir: String,
                             tau: Double = CosineThreshold,
-                            tileTarget: Int = ExactPairTileTarget,
-                            stageShared: Boolean = true): DataFrame = {
+                            tileTarget: Int = ExactPairTileTarget): DataFrame = {
     import spark.implicits._
-    val (_, tilePairs, tiles) =
-      v21Internals(spark, dir, tau, tileTarget, stageShared)
+    val (_, tilePairs, tiles) = v21Internals(spark, dir, tau, tileTarget)
     val paired = tilePairs
       .join(tiles.select($"cent_id".as("ci"), $"ids".as("aid"),
         $"flat".as("af"), $"nrms".as("an")), Seq("ci"))
@@ -234,17 +227,13 @@ object Similarity {
       Seq.fill(dim)(if (rng.nextBoolean()) 1.0 else -1.0)
     }
 
-  /** Random-hyperplane signature: bit j = sign(v · plane_j). */
-  private[graft] def lshSignatureProbe(v: org.apache.spark.sql.Column,
-                                       dim: Int, nPlanes: Int): Column =
-    lshSignature(v, dim, nPlanes)
-
-  /** ±1 planes pack into bitmasks and the native PlaneSignBits
-    * expression runs the whole signature as one primitive loop — the
-    * per-plane when(dot(v, CreateArray…)) tree it replaces evaluated
-    * interpreted at 4.8 s for 20k rows × 64 planes (measured,
-    * `Profile v3probe`); ±1.0 multiplies are exact sign flips and the
-    * summation order is unchanged, so signatures are bit-identical. */
+  /** Random-hyperplane signature: bit j = sign(v · plane_j). The ±1
+    * planes pack into bitmasks and the native PlaneSignBits expression
+    * runs the whole signature as one primitive loop — the per-plane
+    * when(dot(v, CreateArray…)) tree it replaces evaluated interpreted at
+    * 4.8 s for 20k rows × 64 planes (measured); ±1.0 multiplies are exact
+    * sign flips and the summation order is unchanged, so signatures are
+    * bit-identical. */
   private def lshSignature(v: org.apache.spark.sql.Column,
                            dim: Int, nPlanes: Int): org.apache.spark.sql.Column = {
     // hard cap, loudly: `1L << i` wraps mod 64 and PlaneSignBits ignores
@@ -259,6 +248,12 @@ object Similarity {
         }
       }.toIndexedSeq)
   }
+
+  /** The adaptive band width from the corpus count — v3's one definition
+    * (see [[v3AnnLsh]]). */
+  private def adaptiveLshBits(n: Long): Int =
+    math.min(8, math.max(4,
+      math.ceil(math.log(math.max(1.0, n / 64.0)) / math.log(2.0)).toInt))
 
   /** V3 — LSH-bucketed near-dup: 32 hyperplane bits split into 8 bands of
     * 4; docs sharing any band bucket become candidates, then exact cosine
@@ -316,18 +311,6 @@ object Similarity {
     * job (d1/d6 territory: its pair LIST is itself quadratic), not a
     * pairwise LSH's. The subset-of-exact property is untouched — the
     * cap only removes candidates. */
-  /** Content stamp — forwarded to the shared [[Tables.tableStamp]]
-    * (kept here because existing callers address it by this name). */
-  private[graft] def tableStamp(dir: String, table: String): Long =
-    Tables.tableStamp(dir, table)
-
-  /** The adaptive band width from the corpus count — ONE definition,
-    * shared with `Profile v3probe` so the diagnostic measures the same
-    * bucketing v3 runs. */
-  private[graft] def adaptiveLshBits(n: Long): Int =
-    math.min(8, math.max(4,
-      math.ceil(math.log(math.max(1.0, n / 64.0)) / math.log(2.0)).toInt))
-
   def v3AnnLsh(spark: SparkSession, dir: String, nPlanes: Int = -1,
                bands: Int = 8): DataFrame = {
     import spark.implicits._
@@ -1616,7 +1599,7 @@ object Similarity {
     import spark.implicits._
     // native ElementSignBits: one primitive loop per row — the 64
     // when(element_at…) OR-fold it replaces evaluated interpreted
-    // (0.94 s for 20k rows, `Profile v3probe`); codes are bit-identical
+    // (0.94 s for 20k rows, measured); codes are bit-identical
     // (same strict > 0 rule per dimension)
     Tables.load(spark, dir, "embeddings")
       .select($"vec_id", asDouble($"embedding").as("v"))

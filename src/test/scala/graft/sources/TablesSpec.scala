@@ -27,4 +27,19 @@ class TablesSpec extends AnyFunSuite {
     }
     assert(sc.getCheckpointDir.isEmpty)
   }
+
+  // the spread rule: a narrow scan of a table past the size floor fans out
+  // to the session's parallelism (local[4] here); anything below the floor,
+  // or already that wide, passes through untouched
+  test("spreadNarrow spreads only narrow inputs past the size floor") {
+    val p = spark.sparkContext.defaultParallelism
+    assert(p == 4)
+    val narrow = spark.range(10).toDF().coalesce(1)
+    assert(Tables.spreadNarrow(spark, 64 * 1024, narrow)
+      .rdd.getNumPartitions == p)
+    assert(Tables.spreadNarrow(spark, Tables.MinSpreadBytes - 1, narrow)
+      .rdd.getNumPartitions == 1)
+    val wide = spark.range(10).toDF().repartition(p)
+    assert(Tables.spreadNarrow(spark, 64 * 1024, wide) eq wide)
+  }
 }
