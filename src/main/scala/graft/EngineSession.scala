@@ -43,9 +43,36 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 /** One place to build a correctly-configured engine session: UTC (oracle
   * parity), shuffle parallelism = core count (not the 200 default — wrong
   * for local mode and re-planned by AQE on a cluster), AQE on (runtime
-  * skew-join + partition coalescing at scale), and graft's SQL functions
-  * registered. */
+  * skew-join + partition coalescing at scale), the streaming checkpoint
+  * settings in [[StreamingConfs]], and graft's SQL functions registered.
+  *
+  * Streaming checkpoints go through [[graft.streaming.LocalCheckpointFileManager]].
+  * Every micro-batch of a statement writes an offset WAL entry, a commit log
+  * entry and state store delta files, each with a `.crc`. Without
+  * `libhadoop`, Hadoop's local filesystem forks one `chmod` per file and
+  * directory it creates and Spark's default manager forks one `readlink` per
+  * rename; at 20 events/s those forks, not compute, set statement freshness.
+  * The manager sets permissions with `java.nio` instead. To check that it is
+  * in use, `jstack` the JVM while statements run: no thread should show
+  * `org.apache.hadoop.util.Shell` frames. */
 object EngineSession {
+
+  /** Streaming settings of every engine session. They are engine constants,
+    * not user options:
+    *  - `checkpointFileManagerClass`: checkpoints on `file:` paths are written
+    *    without forking a process per file (see above); other schemes keep
+    *    Spark's default manager.
+    *  - `forceDeleteTempCheckpointLocation`: Spark deletes a query's
+    *    temporary checkpoint on stop only if the query did not fail. A
+    *    statement checkpoints to a temporary directory, which has no
+    *    recovery path (a failed statement is evicted and re-created from
+    *    scratch), so keeping it after a failure only leaks one
+    *    offsets/commits/state directory per failure. */
+  val StreamingConfs: Map[String, String] = Map(
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[graft.streaming.LocalCheckpointFileManager].getName,
+    "spark.sql.streaming.forceDeleteTempCheckpointLocation" -> "true")
+
   def create(cores: Int = Runtime.getRuntime.availableProcessors(),
              appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
@@ -55,6 +82,7 @@ object EngineSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(StreamingConfs)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for all suites. */
+/** One shared local SparkSession for all suites, with the engine's
+  * streaming checkpoint settings. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -11,6 +12,7 @@ object SparkTestSession {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(EngineSession.StreamingConfs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -216,6 +217,33 @@ class ChangelogStreamSpec extends AnyFunSuite {
       assert(messages(ex).exists(_.contains("maxBufferedRecords")),
         s"error must name the budget: ${messages(ex)}")
     } finally handle.stop()
+  }
+
+  // a statement checkpoints to a temporary directory with no recovery path,
+  // and a failed statement is evicted and re-created from scratch: the
+  // engine's sessions delete that directory on stop even after a failure,
+  // where Spark alone keeps it
+  test("a failed updating query leaves no temporary checkpoint behind") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val mem = MemoryStream[User]
+    val counts = mem.toDF().groupBy($"guid").agg(count(lit(1)).as("n"))
+    val handle = ChangelogStream.updating(counts, "ckpt-cleanup-test",
+      Seq("guid"), maxBufferedRecords = 4)
+    val root = new java.io.File(new org.apache.hadoop.fs.Path(
+      handle.query.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .resolvedCheckpointRoot).toUri.getPath)
+    try {
+      mem.addData(users.take(1)) // 1 group: +I fits the cap of 4
+      handle.processAllAvailable()
+      assert(root.isDirectory, s"no checkpoint written at $root")
+      mem.addData(users) // 6 groups: over the cap, the query fails
+      intercept[Exception](handle.processAllAvailable())
+      // termination is signalled after the stream thread's cleanup
+      intercept[StreamingQueryException](handle.query.awaitTermination())
+    } finally handle.stop()
+    assert(!root.exists(), s"failed query left its checkpoint at $root")
   }
 
   // the cap must protect the driver BEFORE the transfer, not only after:

@@ -40,9 +40,12 @@ class ThroughputSpec extends AnyFunSuite {
       val rate = total / secs
       val perBatch = secs / 10
       info(f"sustained $rate%.0f events/s; $perBatch%.3f s per 1000-event micro-batch")
-      // ~1 s/micro-batch here is fixed planning/state-commit overhead of the
-      // 4-core test session, amortized away at the reference's 20 ev/s input
-      // (20-row batches) or under Trigger.ProcessingTime on a real cluster
+      // per-batch time here is the fixed cost of a micro-batch on the
+      // 4-core test session: planning, the sink's jobs, the state store and
+      // the checkpoint writes. On a 4-vCPU host it reads 0.40-0.45 s when
+      // this suite runs alone and ~0.2 s late in a full run; with Spark's
+      // default checkpoint manager, which forks chmod/readlink for every
+      // checkpoint file without libhadoop, it read 0.57-0.80 s alone
       assert(rate >= 20 * 10, f"rate $rate%.0f events/s below 10x the baseline")
       assert(perBatch < 5.0, f"micro-batch latency $perBatch%.3f s unreasonable")
     } finally handle.stop()
